@@ -1,0 +1,7 @@
+"""Put the benchmark modules and the checkout root on ``sys.path``."""
+
+import os
+import sys
+
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(_HERE), os.path.dirname(os.path.dirname(_HERE))]
