@@ -16,7 +16,10 @@ the plan).  What remains is the orchestration contract:
 * success/fail counters + on_success/on_failure callbacks (E7) with the
   reference's statsd metric naming kept for parity
   (``amundsen.databuilder.job.{identifier}.{success|fail}`` shape,
-  job/customized_job.py:17-18 — re-namespaced to this engine).
+  job/customized_job.py:17-18 — re-namespaced to this engine);
+* per-phase wall time (extract+stage, read-back, publish) and publish
+  volume (messages, batches, bytes) on ``PipelineResult``, emitted as
+  gauges beside the staged row counts.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ab_metadata_pusher_spark.sinks.sqs import PublishReport
 from ab_metadata_pusher_spark.sinks.staging import StagingArea
 
 __all__ = ["MetricsEmitter", "Pipeline", "PipelineResult"]
@@ -92,6 +96,13 @@ class PipelineResult:
     #: rows staged per frame, measured by ``df.observe`` DURING the
     #: staging write — no second pass (None for publisher-only runs).
     staged_rows: dict[str, int] | None = None
+    #: wall seconds per phase: ``extract_stage`` (extract, transform and
+    #: staging write; absent for publisher-only runs), ``read_back`` and
+    #: ``publish`` (absent without a publisher).
+    phase_sec: dict[str, float] = field(default_factory=dict)
+    #: ``messages``/``batches``/``bytes`` sent, when the publisher
+    #: returns a :class:`PublishReport` (None otherwise).
+    publish_volume: dict[str, int] | None = None
 
 
 @dataclass
@@ -121,6 +132,23 @@ class Pipeline:
         staged = published = False
         report = None
         staged_rows: dict[str, int] | None = None
+        volume: dict[str, int] | None = None
+        phase_sec: dict[str, float] = {}
+        # feature-detect: pre-existing emitters implement only the
+        # reference's incr counters
+        gauge = getattr(self.metrics, "gauge", None)
+        clock = time.perf_counter()
+
+        def emit(name: str, value: float) -> None:
+            if callable(gauge):
+                gauge(f"{METRIC_PREFIX}.{self.identifier}.{name}", value)
+
+        def end_phase(phase: str) -> None:
+            nonlocal clock
+            now = time.perf_counter()
+            phase_sec[phase] = round(now - clock, 3)
+            clock = now
+
         try:
             if self.extract is not None:
                 nodes, relations = self.extract(spark)
@@ -139,28 +167,35 @@ class Pipeline:
                 staged = True
                 staged_rows = {"nodes": int(obs_n.get["n_rows"]),
                                "relations": int(obs_r.get["n_rows"])}
-                # feature-detect: pre-existing emitters implement only
-                # the reference's incr counters
-                gauge = getattr(self.metrics, "gauge", None)
-                if callable(gauge):
-                    for frame, n in staged_rows.items():
-                        gauge(f"{METRIC_PREFIX}.{self.identifier}"
-                              f".staged_rows.{frame}", n)
+                end_phase("extract_stage")
+                for frame, n in staged_rows.items():
+                    emit(f"staged_rows.{frame}", n)
             nodes = self.staging.read_nodes(spark)
             relations = self.staging.read_relations(spark)
+            end_phase("read_back")
             if self.publish is not None:
                 report = self.publish(nodes, relations)
                 published = True
+                end_phase("publish")
+                if isinstance(report, PublishReport):
+                    volume = {"messages": report.messages_sent,
+                              "batches": report.batches_sent,
+                              "bytes": report.bytes_sent}
         except Exception as exc:
             self.metrics.incr(f"{METRIC_PREFIX}.{self.identifier}.fail")
             if self.on_failure is not None:
                 self.on_failure(exc)
             raise
+        for phase, sec in phase_sec.items():
+            emit(f"phase_sec.{phase}", sec)
+        for name, n in (volume or {}).items():
+            emit(f"published.{name}", n)
         self.metrics.incr(f"{METRIC_PREFIX}.{self.identifier}.success")
         result = PipelineResult(
             identifier=self.identifier, succeeded=True, staged=staged,
             published=published, elapsed_sec=round(time.time() - start, 3),
-            publish_report=report, staged_rows=staged_rows)
+            publish_report=report, staged_rows=staged_rows,
+            phase_sec=phase_sec, publish_volume=volume)
         if self.on_success is not None:
             self.on_success(result)
         return result

@@ -18,7 +18,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CONFIG"]
+__all__ = ["get_spark", "DEFAULT_CONFIG", "default_driver_memory"]
+
+#: Ceiling of the default driver heap, in GiB.
+_MAX_DRIVER_HEAP_GIB = 48
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB, between 1g and 48g.
+
+    The other half is left to the JVM's off-heap memory, the Python
+    driver and the Python workers: a heap sized past physical memory
+    gets the JVM killed by the kernel on a host without swap.
+    """
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf figure
+        return f"{_MAX_DRIVER_HEAP_GIB}g"
+    return f"{max(1, min(_MAX_DRIVER_HEAP_GIB, phys // 2 ** 31))}g"
 
 DEFAULT_CONFIG: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -30,10 +47,12 @@ DEFAULT_CONFIG: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Local-mode driver JVM heap: Spark's 1g default OOMs legitimate
     # hundred-million-row shuffles (measured: the graph wedge aggregation
-    # at sf0.1) on a 128 GiB box.  Only effective before the JVM starts —
+    # at sf0.1) on a 128 GiB box, so the default is sized from the host
+    # (default_driver_memory).  Only effective before the JVM starts —
     # i.e. for the FIRST session in the process — and ignored with a
     # warning on a real cluster where spark-submit owns the setting.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                          default_driver_memory()),
     # WIDTH ASSUMPTION (r10 ADVICE): the shuffle-hash hints in
     # operators/dedup.py (shingle self-join) and the triangle intersect
     # joins bound their per-task hash build by 1/width of the build

@@ -16,7 +16,12 @@ dead ``JOB_PUBLISH_TAG``.  This sink fixes all three:
 Two execution modes:
 
 * ``publish_collected`` — driver-side, for metadata-sized outputs
-  (reference parity: the whole graph of a database's catalog is small);
+  (reference parity: the whole graph of a database's catalog is small).
+  Each frame crosses from the JVM as Arrow record batches
+  (``DataFrame.toArrow``); the batches are turned into dicts one batch at
+  a time and streamed into the packer, which keeps one JSON string per
+  record.  No list of ``Row`` objects or of dicts is ever built, so the
+  driver holds the frame's Arrow columns plus the serialized records;
 * ``publish_distributed`` — ``foreachPartition``: each executor packs and
   sends its partition, so 100 TB of records never transit the driver.
   Clients are constructed per-partition via the injectable factory.
@@ -27,13 +32,18 @@ deployments pass ``lambda: boto3.client("sqs")``.
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import logging
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StructType, TimestampType,
+)
 
 from ab_metadata_pusher_spark.sinks.envelope import (
     DEFAULT_MAX_BYTES, pack_envelopes,
@@ -55,6 +65,58 @@ class PublishReport:
 
 def _dedup_id(body: str) -> str:
     return hashlib.sha256(body.encode("utf-8")).hexdigest()
+
+
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+_MICROSECOND = datetime.timedelta(microseconds=1)
+
+
+def _as_row_value(dtype: DataType) -> Callable[[Any], Any] | None:
+    """Converter from Arrow's Python value of a ``dtype`` column to the
+    value ``Row.asDict(recursive=True)`` holds, or None where they agree.
+
+    Arrow differs in two places: TIMESTAMP comes back tz-aware, where a
+    ``Row`` holds ``TimestampType.fromInternal``'s naive local datetime,
+    and MAP comes back as a list of pairs, where a ``Row`` holds a dict.
+    Structs are already dicts.  Object-valued types (UDTs, VARIANT) take
+    the converter Spark's own Arrow-to-``Row`` collect uses.
+    """
+    if isinstance(dtype, TimestampType):
+        return lambda v: None if v is None else dtype.fromInternal(
+            (v - _EPOCH) // _MICROSECOND)
+    if isinstance(dtype, MapType):
+        key = _as_row_value(dtype.keyType) or (lambda k: k)
+        val = _as_row_value(dtype.valueType) or (lambda x: x)
+        return lambda v: None if v is None else {
+            key(k): val(x) for k, x in v}
+    if isinstance(dtype, ArrayType):
+        elem = _as_row_value(dtype.elementType)
+        if elem is None:
+            return None
+        return lambda v: None if v is None else [elem(x) for x in v]
+    if isinstance(dtype, StructType):
+        convs = [(f.name, c) for f in dtype.fields
+                 if (c := _as_row_value(f.dataType)) is not None]
+        if not convs:
+            return None
+
+        def struct(v: dict[str, Any] | None) -> dict[str, Any] | None:
+            if v is not None:
+                for name, conv in convs:
+                    v[name] = conv(v[name])
+            return v
+        return struct
+    return ArrowTableToRowsConversion._create_converter(
+        dtype, none_on_identity=True)
+
+
+def _records(df: DataFrame) -> Iterator[dict[str, Any]]:
+    """Yield ``df``'s rows as ``Row.asDict(recursive=True)``-equal dicts,
+    one Arrow record batch at a time."""
+    convert = _as_row_value(df.schema)
+    for batch in df.toArrow().to_batches():
+        recs = batch.to_pylist()
+        yield from recs if convert is None else map(convert, recs)
 
 
 class SqsPublisher:
@@ -121,11 +183,19 @@ class SqsPublisher:
     def publish_collected(self, nodes: DataFrame, relations: DataFrame,
                           tag: str) -> PublishReport:
         """Collect + pack + send from the driver.  Correct choice when the
-        output is metadata-sized (the reference's regime); raises early if
-        a single record exceeds the envelope budget."""
-        node_recs = [r.asDict(recursive=True) for r in nodes.collect()]
-        rel_recs = [r.asDict(recursive=True) for r in relations.collect()]
-        bodies = pack_envelopes(node_recs, rel_recs, tag, self.max_bytes)
+        output is metadata-sized (the reference's regime); raises early,
+        before any send, if a single record exceeds the envelope budget.
+
+        Memory profile: each frame is collected as Arrow record batches
+        (``toArrow``), lazily, when the packer reaches it.  One batch at a
+        time becomes dicts, which are serialized once and dropped before
+        the next batch, so besides one frame's Arrow columns the driver
+        holds one JSON string per record — never a list of ``Row``
+        objects or of the frame's dicts.
+        The bodies are byte-identical to packing
+        ``collect()`` + ``asDict(recursive=True)`` records."""
+        bodies = pack_envelopes(_records(nodes), _records(relations), tag,
+                                self.max_bytes)
         report = self.send_bodies(self.client_factory(), bodies)
         logger.info("published %d messages in %d batches (%d bytes) tag=%s",
                     report.messages_sent, report.batches_sent,

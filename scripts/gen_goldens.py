@@ -1,6 +1,7 @@
 """Generate the golden output-contract files (SURVEY.md §5.2): the exact
 bytes of the legacy CSV staging layout, and the exact envelope-chunk JSON
-strings, for the sf0.001 fixture catalog.
+strings that ``SqsPublisher.publish_collected`` sends, for the sf0.001
+fixture catalog.
 
 Run once after an INTENTIONAL contract change:
     python scripts/gen_goldens.py
@@ -26,7 +27,7 @@ def build(spark, tmp_dir: str) -> dict[str, str]:
         to_nodes, to_relations,
     )
     from ab_metadata_pusher_spark.operators.metadata import table_metadata
-    from ab_metadata_pusher_spark.sinks.envelope import pack_envelopes
+    from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
     from ab_metadata_pusher_spark.sinks.staging import StagingArea
     from ab_metadata_pusher_spark.sources.catalog import catalog_columns
 
@@ -42,10 +43,20 @@ def build(spark, tmp_dir: str) -> dict[str, str]:
         assert len(parts) == 1, parts
         return parts[0].read_text()
 
-    chunks = list(pack_envelopes(
-        [r.asDict() for r in nodes.collect()],
-        [r.asDict() for r in rels.collect()],
-        tag="golden", max_bytes=4096))
+    class _Client:
+        """An SQS client that keeps every message body, in send order."""
+
+        def __init__(self) -> None:
+            self.bodies: list[str] = []
+
+        def send_message_batch(self, QueueUrl, Entries):
+            self.bodies.extend(e["MessageBody"] for e in Entries)
+            return {}
+
+    client = _Client()
+    SqsPublisher("golden", lambda: client, max_bytes=4096) \
+        .publish_collected(nodes, rels, tag="golden")
+    chunks = client.bodies
     return {
         "nodes_legacy.csv": csv_bytes(f"{area.nodes_dir}_csv"),
         "relations_legacy.csv": csv_bytes(f"{area.relations_dir}_csv"),

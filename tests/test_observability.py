@@ -113,8 +113,10 @@ def test_statsd_emitter_sends_real_udp_datagrams(spark, tmp_path):
     """E5 live: Pipeline.run with the StatsdEmitter must deliver REAL
     statsd wire-protocol datagrams to a UDP listener — the reference's
     amundsen.databuilder.job.{id}.{success} counter naming discipline,
-    exercised over an actual socket instead of a logger stub.  A send
-    to a dead port must be swallowed (metrics never fail the job)."""
+    exercised over an actual socket instead of a logger stub — carrying
+    the staged row counts, each phase's wall time and the publish
+    volume as gauges.  A send to a dead port must be swallowed (metrics
+    never fail the job)."""
     import socket
 
     from pyspark.sql import functions as F
@@ -122,7 +124,12 @@ def test_statsd_emitter_sends_real_udp_datagrams(spark, tmp_path):
     from ab_metadata_pusher_spark.pipeline import (
         METRIC_PREFIX, Pipeline, StatsdEmitter,
     )
+    from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
     from ab_metadata_pusher_spark.sinks.staging import StagingArea
+
+    class Sqs:
+        def send_message_batch(self, QueueUrl, Entries):
+            return {}
 
     srv = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
     srv.bind(("127.0.0.1", 0))
@@ -139,20 +146,36 @@ def test_statsd_emitter_sends_real_udp_datagrams(spark, tmp_path):
             F.lit("COL").alias("TYPE"))
         return nodes, rels
 
+    publisher = SqsPublisher("https://queue/statsd", Sqs, max_bytes=160)
     p = Pipeline(identifier="statsd_live",
                  staging=StagingArea(str(tmp_path / "stage")),
                  extract=extract,
+                 publish=lambda n, r: publisher.publish_collected(n, r, "t"),
                  metrics=StatsdEmitter("127.0.0.1", port))
     res = p.run(spark)
     assert res.succeeded
+    assert set(res.phase_sec) == {"extract_stage", "read_back", "publish"}
+    rep = res.publish_report
+    assert res.publish_volume == {"messages": rep.messages_sent,
+                                  "batches": rep.batches_sent,
+                                  "bytes": rep.bytes_sent}
+    assert rep.messages_sent > 1  # 160-byte envelopes split the 3 records
 
+    name = f"{METRIC_PREFIX}.statsd_live."
+    success = f"{name}success:1|c"
     seen = []
-    while len(seen) < 3:
+    while success not in seen:  # the success counter goes out last
         seen.append(srv.recvfrom(65536)[0].decode())
     srv.close()
-    assert f"{METRIC_PREFIX}.statsd_live.staged_rows.nodes:2|g" in seen
-    assert f"{METRIC_PREFIX}.statsd_live.staged_rows.relations:1|g" in seen
-    assert f"{METRIC_PREFIX}.statsd_live.success:1|c" in seen
+    gauges = {}
+    for datagram in seen[:-1]:
+        metric, _, value = datagram.removesuffix("|g").rpartition(":")
+        gauges[metric.removeprefix(name)] = float(value)
+    assert gauges == {
+        "staged_rows.nodes": 2, "staged_rows.relations": 1,
+        **{f"phase_sec.{k}": v for k, v in res.phase_sec.items()},
+        **{f"published.{k}": v for k, v in res.publish_volume.items()}}
+    assert all(v >= 0 for v in res.phase_sec.values())
 
     # fire-and-forget: an unroutable destination must not raise
     StatsdEmitter("127.0.0.1", 9).incr("x.y")

@@ -6,6 +6,8 @@ pipeline lifecycle incl. publisher-only re-publish (EP3)."""
 from __future__ import annotations
 
 import json
+import os
+import time
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -15,7 +17,7 @@ from ab_metadata_pusher_spark.operators.graph import to_nodes, to_relations
 from ab_metadata_pusher_spark.operators.metadata import table_metadata
 from ab_metadata_pusher_spark.pipeline import Pipeline
 from ab_metadata_pusher_spark.sinks.envelope import (
-    SQS_HARD_LIMIT, envelope_json, pack_envelopes,
+    SQS_HARD_LIMIT, _record_size, envelope_json, pack_envelopes,
 )
 from ab_metadata_pusher_spark.sinks.kafka import build_kafka_rows
 from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
@@ -96,6 +98,67 @@ def test_pack_envelopes_counts_real_utf8_bytes():
             for n in json.loads(body)["nodes"]] == nodes
 
 
+def _two_pass_pack(nodes, relations, tag, max_bytes):
+    """The packing law as first written: size every record with
+    ``_record_size``, then serialize each chunk's records again with
+    ``envelope_json``."""
+    budget = max_bytes - len(
+        envelope_json([], [], 0, 10 ** 9, tag).encode("utf-8"))
+    if budget <= 0:
+        raise ValueError(f"max_bytes={max_bytes} leaves no record budget")
+    chunks, cur, cur_size = [], ([], []), 0
+    for side, kind, records in ((0, "nodes", nodes),
+                                (1, "relations", relations)):
+        for record in records:
+            size = _record_size(record)
+            if size > budget:
+                raise ValueError(
+                    f"single {kind} record of {size} bytes exceeds the "
+                    f"{budget}-byte envelope budget; split the record")
+            if cur_size + size > budget and (cur[0] or cur[1]):
+                chunks.append(cur)
+                cur, cur_size = ([], []), 0
+            cur[side].append(record)
+            cur_size += size
+    if cur[0] or cur[1]:
+        chunks.append(cur)
+    return [envelope_json(ns, rs, i, len(chunks), tag)
+            for i, (ns, rs) in enumerate(chunks)]
+
+
+def _outcome(pack):
+    try:
+        return pack()
+    except ValueError as exc:
+        return ("ValueError", str(exc))
+
+
+_text = st.text(
+    st.one_of(st.characters(codec="utf-8"),
+              st.sampled_from('é😀𝄞"\\\n\t\x00\x01\x1f\x7f\u2028')),
+    max_size=12)
+_value = st.recursive(
+    st.none() | st.booleans() | st.integers() | st.floats() | _text,
+    lambda inner: (st.lists(inner, max_size=3)
+                   | st.dictionaries(_text, inner, max_size=3)),
+    max_leaves=8)
+_records_st = st.lists(st.dictionaries(_text, _value, max_size=4),
+                       max_size=12)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_records_st, _records_st, _text,
+       st.integers(min_value=0, max_value=600))
+def test_pack_envelopes_matches_two_pass_reference(nodes, rels, tag,
+                                                   max_bytes):
+    """Serializing each record once gives the bytes, chunk boundaries and
+    errors of sizing with ``_record_size`` and re-serializing with
+    ``envelope_json``."""
+    want = _outcome(lambda: _two_pass_pack(nodes, rels, tag, max_bytes))
+    got = _outcome(lambda: list(pack_envelopes(nodes, rels, tag, max_bytes)))
+    assert got == want
+
+
 # -- SQS publisher ----------------------------------------------------------
 
 def _graph(spark, sf_dir):
@@ -141,6 +204,67 @@ def test_sqs_batch_failure_raises(spark, sf_dir):
     pub = SqsPublisher("https://queue/test", lambda: stub)
     with pytest.raises(RuntimeError, match="failed"):
         pub.publish_collected(nodes, relations, tag="r1")
+
+
+#: One row of every type whose Arrow value could differ from the
+#: ``Row`` value; TIMESTAMP and MAP also sit nested in arrays and structs.
+_TYPES_SQL = r"""
+SELECT 'é😀 "q" \\ \n\t\u0001\u001f' AS s, CAST(NULL AS STRING) AS n,
+       7 AS i, 9007199254740993L AS l, true AS b, 0.1D AS d,
+       CAST(1.1 AS FLOAT) AS f, CAST(1.50 AS DECIMAL(10, 2)) AS dec,
+       DATE'1969-07-20' AS dt,
+       timestamp_micros(1730622600000001) AS ts,
+       timestamp_micros(-1) AS ts_pre_epoch,
+       CAST(NULL AS TIMESTAMP) AS ts_null,
+       TIMESTAMP_NTZ'2024-03-01 12:34:56.5' AS tsn,
+       array(1, NULL, 3) AS arr, X'00FF' AS bin,
+       map('b', 2, 'a', NULL) AS m, CAST(NULL AS MAP<STRING, INT>) AS m_null,
+       map(1, array(timestamp_micros(0))) AS m_ts,
+       array(timestamp_micros(1730622600000001), NULL) AS ts_arr,
+       array(map('k', timestamp_micros(0))) AS map_arr,
+       named_struct('a', 1, 'b', 'x', 'ts', timestamp_micros(-1),
+                    'm', map('k', named_struct('t', timestamp_micros(0))))
+         AS st
+"""
+
+
+@pytest.mark.parametrize("local_tz,session_tz", [
+    ("UTC", "UTC"), ("America/Los_Angeles", "Asia/Kolkata")])
+def test_publish_collected_type_fidelity(spark, local_tz, session_tz):
+    """Bodies from the Arrow path equal bodies packed from
+    ``collect()`` + ``asDict(recursive=True)``, for every type, in a
+    non-UTC driver zone and session zone too (a Row's TIMESTAMP is naive
+    local time)."""
+    from pyspark.ml.linalg import Vectors
+
+    nodes = spark.sql(_TYPES_SQL)
+    rels = (spark.createDataFrame(
+                [(Vectors.dense([1.0, 2.0]), Vectors.sparse(3, [1], [2.5]))],
+                ["dense", "sparse"])
+            .selectExpr("*", """parse_json('{"a":[1,"é"]}') AS var"""))
+    old_tz = os.environ.get("TZ")
+    old_session_tz = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = local_tz
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    try:
+        stub = StubSqsClient()
+        SqsPublisher("https://queue/types", lambda: stub, max_bytes=640) \
+            .publish_collected(nodes, rels, tag="types")
+        want = list(pack_envelopes(
+            [r.asDict(recursive=True) for r in nodes.collect()],
+            [r.asDict(recursive=True) for r in rels.collect()],
+            "types", 640))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_session_tz)
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    got = [e["MessageBody"] for b in stub.batches for e in b["Entries"]]
+    assert len(want) == 2  # the relation does not fit beside the node
+    assert got == want
 
 
 # -- staging ----------------------------------------------------------------
