@@ -32,10 +32,11 @@ __all__ = ["seed_centroids", "assign_clusters", "update_centroids",
 def seed_centroids(corpus: DataFrame, k: int,
                    id_col: str = "vec_id",
                    emb_col: str = "embedding") -> list[tuple[int, list[float]]]:
-    """Deterministic seeding: the vectors with the k smallest ids, cluster
-    j seeded from id j (reproducible everywhere, unlike random init)."""
-    rows = (corpus.filter(F.col(id_col) < k)
-            .select(id_col, _dbl(F.col(emb_col)).alias("v")).collect())
+    """Deterministic seeding: the vectors with the k smallest ids, each
+    cluster numbered by its seed's id, in ascending order (reproducible
+    everywhere, unlike random init; on ids 0..n-1 cluster j is id j)."""
+    rows = (corpus.select(id_col, _dbl(F.col(emb_col)).alias("v"))
+            .orderBy(id_col).limit(k).collect())
     return [(int(r[id_col]), [float(x) for x in r["v"]]) for r in rows]
 
 

@@ -18,10 +18,12 @@ Two execution modes:
 * ``publish_collected`` — driver-side, for metadata-sized outputs
   (reference parity: the whole graph of a database's catalog is small).
   Each frame crosses from the JVM as Arrow record batches
-  (``DataFrame.toArrow``); the batches are turned into dicts one batch at
-  a time and streamed into the packer, which keeps one JSON string per
-  record.  No list of ``Row`` objects or of dicts is ever built, so the
-  driver holds the frame's Arrow columns plus the serialized records;
+  (``DataFrame.toArrow``), and each batch's record JSON is built column
+  by column with Arrow compute kernels into one Arrow text array.  The
+  packer sizes records from those arrays' offsets and slices each body
+  from their data buffers, so the driver holds Arrow columns and Arrow
+  text buffers.  No ``Row`` or dict is made per record, and string,
+  integer and boolean values never become Python objects;
 * ``publish_distributed`` — ``foreachPartition``: each executor packs and
   sends its partition, so 100 TB of records never transit the driver.
   Clients are constructed per-partition via the injectable factory.
@@ -39,6 +41,7 @@ from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.types import (
@@ -46,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from ab_metadata_pusher_spark.sinks.envelope import (
-    DEFAULT_MAX_BYTES, pack_envelopes,
+    DEFAULT_MAX_BYTES, pack_envelopes, pack_texts, record_texts,
 )
 
 __all__ = ["SqsPublisher", "PublishReport"]
@@ -61,10 +64,6 @@ class PublishReport:
     messages_sent: int
     batches_sent: int
     bytes_sent: int
-
-
-def _dedup_id(body: str) -> str:
-    return hashlib.sha256(body.encode("utf-8")).hexdigest()
 
 
 _EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
@@ -110,13 +109,15 @@ def _as_row_value(dtype: DataType) -> Callable[[Any], Any] | None:
         dtype, none_on_identity=True)
 
 
-def _records(df: DataFrame) -> Iterator[dict[str, Any]]:
-    """Yield ``df``'s rows as ``Row.asDict(recursive=True)``-equal dicts,
-    one Arrow record batch at a time."""
-    convert = _as_row_value(df.schema)
+def _texts(df: DataFrame) -> Iterator[pa.Array]:
+    """Yield ``df``'s record texts (``record_texts``), one Arrow record
+    batch at a time; each record's JSON equals that of its
+    ``Row.asDict(recursive=True)``.  Only the columns whose Arrow values
+    differ from the ``Row`` values are encoded per value."""
+    convert = {f.name: c for f in df.schema.fields
+               if (c := _as_row_value(f.dataType)) is not None}
     for batch in df.toArrow().to_batches():
-        recs = batch.to_pylist()
-        yield from recs if convert is None else map(convert, recs)
+        yield record_texts(batch, convert)
 
 
 class SqsPublisher:
@@ -163,16 +164,18 @@ class SqsPublisher:
             entries.clear()
 
         for i, body in enumerate(bodies):
+            data = body.encode("utf-8")
             entry: dict[str, Any] = {
                 "Id": str(i % _BATCH_SIZE),
                 "MessageBody": body,
             }
             if self.fifo:
                 entry["MessageGroupId"] = self.message_group_id
-                entry["MessageDeduplicationId"] = _dedup_id(body)
+                entry["MessageDeduplicationId"] = hashlib.sha256(
+                    data).hexdigest()
             entries.append(entry)
             sent += 1
-            nbytes += len(body.encode("utf-8"))
+            nbytes += len(data)
             if len(entries) == _BATCH_SIZE:
                 flush()
         flush()
@@ -187,15 +190,16 @@ class SqsPublisher:
         before any send, if a single record exceeds the envelope budget.
 
         Memory profile: each frame is collected as Arrow record batches
-        (``toArrow``), lazily, when the packer reaches it.  One batch at a
-        time becomes dicts, which are serialized once and dropped before
-        the next batch, so besides one frame's Arrow columns the driver
-        holds one JSON string per record — never a list of ``Row``
-        objects or of the frame's dicts.
+        (``toArrow``), lazily, when the packer reaches it.  Each batch's
+        columns become one Arrow text array of record JSON; string,
+        integer and boolean columns never leave Arrow.  Besides one
+        frame's Arrow columns the driver holds those text buffers, and
+        each body is sliced from them — no ``Row``, dict or string is
+        made per record.
         The bodies are byte-identical to packing
         ``collect()`` + ``asDict(recursive=True)`` records."""
-        bodies = pack_envelopes(_records(nodes), _records(relations), tag,
-                                self.max_bytes)
+        bodies = pack_texts(_texts(nodes), _texts(relations), tag,
+                            self.max_bytes)
         report = self.send_bodies(self.client_factory(), bodies)
         logger.info("published %d messages in %d batches (%d bytes) tag=%s",
                     report.messages_sent, report.batches_sent,

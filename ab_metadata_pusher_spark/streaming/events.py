@@ -190,7 +190,8 @@ def foreach_batch_publish(events: DataFrame, publisher, tag: str,
     ``distributed=True`` (default) sends executor-side via
     ``SqsPublisher.publish_distributed`` — each partition packs and ships
     its own envelopes, so batch size is bounded by partition size, not
-    driver memory.  ``distributed=False`` collects to the driver first:
+    driver memory.  ``distributed=False`` sends through
+    ``SqsPublisher.publish_collected``, which collects to the driver first:
     only for metadata-sized batches that must land as ONE contiguous
     chunk sequence (the reference's publish contract,
     publisher/aws_sqs_csv_puiblisher.py).
@@ -200,18 +201,13 @@ def foreach_batch_publish(events: DataFrame, publisher, tag: str,
     resends all records).  Set a checkpoint dir for exactly-once ticks;
     the content-hash MessageDeduplicationId makes accidental replays
     idempotent on FIFO queues either way."""
-    from ab_metadata_pusher_spark.sinks.envelope import pack_envelopes
-
     def publish_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_tag = f"{tag}-batch{batch_id}"
+        empty = batch_df.sparkSession.createDataFrame([], batch_df.schema)
         if distributed:
-            empty = batch_df.sparkSession.createDataFrame(
-                [], batch_df.schema)
             publisher.publish_distributed(batch_df, empty, batch_tag)
-            return
-        records = [r.asDict(recursive=True) for r in batch_df.collect()]
-        bodies = pack_envelopes(records, [], batch_tag, publisher.max_bytes)
-        publisher.send_bodies(publisher.client_factory(), bodies)
+        else:
+            publisher.publish_collected(batch_df, empty, batch_tag)
 
     return (events.writeStream.foreachBatch(publish_batch)
             .trigger(availableNow=True).start())

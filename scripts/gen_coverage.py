@@ -88,10 +88,11 @@ STATIC = [
      "sinks/layout.py write_compacted",
      "tests/test_bucketing.py test_compaction_bin_packs_to_target_size"),
     ("E1", "Record union nodes-then-relations",
-     "sinks/envelope.py pack_envelopes ordering",
+     "sinks/envelope.py pack_texts ordering",
      "tests/test_sinks.py; tests/test_golden.py (byte-pinned)"),
     ("E2", "JSON envelope assembly (byte-pinned golden)",
-     "sinks/envelope.py envelope_json", "tests/test_sinks.py"),
+     "sinks/envelope.py pack_texts over record_texts "
+     "(envelope_json is the reference bytes)", "tests/test_sinks.py"),
     ("E3", "SQS publish with 256 KiB chunking + SendMessageBatch",
      "sinks/sqs.py SqsPublisher",
      "tests/test_sinks.py LIVE via real boto3 -> local SQS-JSON HTTP "

@@ -85,6 +85,34 @@ def test_kmeans_separable_clusters(spark):
     assert dict(update_centroids(e, carried)) == updated
 
 
+def test_kmeans_seeds_from_smallest_ids_not_zero_based(spark):
+    """Seeds are the vectors with the k smallest ids whatever the ids
+    are: a corpus whose ids start at 1,000 and have gaps still seeds k
+    clusters, so k-means and SemDeDup run on it."""
+    from ab_metadata_pusher_spark.operators.clustering import (
+        kmeans_fit_assign, seed_centroids,
+    )
+    from ab_metadata_pusher_spark.operators.similarity import (
+        semantic_dedup_pairs,
+    )
+    ids = [1000, 1003, 1004, 1010, 1011, 1017, 1030, 1031, 1032]
+    vecs = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [1.0, 0.01],
+            [0.01, 1.0], [-1.0, 0.01], [0.99, 0.0], [0.0, 0.99],
+            [-0.99, 0.0]]
+    e = spark.createDataFrame(list(zip(reversed(ids), reversed(vecs))),
+                              "vec_id bigint, embedding array<double>")
+
+    seeds = seed_centroids(e, 3)
+    assert seeds == [(1000, [1.0, 0.0]), (1003, [0.0, 1.0]),
+                     (1004, [-1.0, 0.0])]
+    out = {r["vec_id"]: r["cluster"]
+           for r in kmeans_fit_assign(e, k=3, iters=1).collect()}
+    assert out == {i: ids[k % 3] for k, i in enumerate(ids)}
+    pairs = {(r["vec_a"], r["vec_b"])
+             for r in semantic_dedup_pairs(e, 0.999, n_cells=3).collect()}
+    assert (1000, 1010) in pairs and (1003, 1011) in pairs
+
+
 def test_update_centroids_null_tolerant(spark):
     """r8 ADVICE: NULL embeddings / NULL elements must not skew the
     mean, and an all-NULL cluster must drop instead of raising

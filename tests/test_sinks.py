@@ -9,6 +9,7 @@ import json
 import os
 import time
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -17,7 +18,8 @@ from ab_metadata_pusher_spark.operators.graph import to_nodes, to_relations
 from ab_metadata_pusher_spark.operators.metadata import table_metadata
 from ab_metadata_pusher_spark.pipeline import Pipeline
 from ab_metadata_pusher_spark.sinks.envelope import (
-    SQS_HARD_LIMIT, _record_size, envelope_json, pack_envelopes,
+    SQS_HARD_LIMIT, _encode, _record_size, envelope_json, pack_envelopes,
+    pack_texts, record_texts,
 )
 from ab_metadata_pusher_spark.sinks.kafka import build_kafka_rows
 from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
@@ -157,6 +159,154 @@ def test_pack_envelopes_matches_two_pass_reference(nodes, rels, tag,
     want = _outcome(lambda: _two_pass_pack(nodes, rels, tag, max_bytes))
     got = _outcome(lambda: list(pack_envelopes(nodes, rels, tag, max_bytes)))
     assert got == want
+
+
+# -- Arrow record texts -----------------------------------------------------
+
+_INT_TYPES = [(pa.int8(), 7), (pa.int16(), 15), (pa.int32(), 31),
+              (pa.int64(), 63)]
+_str_value = st.text(
+    st.one_of(st.characters(codec="utf-8"),
+              st.sampled_from([chr(c) for c in range(0x20)]
+                              + ['"', "\\", "\x7f", "\u2028", "é", "😀",
+                                 "𝄞"])),
+    max_size=10)
+
+
+@st.composite
+def _arrow_column(draw, n):
+    kind = draw(st.sampled_from(
+        ["string", "large_string", "int", "bool", "double", "list",
+         "struct"]))
+    if kind in ("string", "large_string"):
+        typ = pa.string() if kind == "string" else pa.large_string()
+        values = st.none() | _str_value
+    elif kind == "int":
+        typ, bits = draw(st.sampled_from(_INT_TYPES))
+        values = st.none() | st.integers(-2 ** bits, 2 ** bits - 1)
+    elif kind == "bool":
+        typ, values = pa.bool_(), st.none() | st.booleans()
+    elif kind == "double":
+        typ, values = pa.float64(), st.none() | st.floats()
+    elif kind == "list":
+        typ = pa.list_(pa.int64())
+        values = st.none() | st.lists(st.none() | st.integers(-9, 9),
+                                      max_size=3)
+    else:
+        typ = pa.struct([("q", pa.string()), ("n", pa.int64())])
+        values = st.none() | st.fixed_dictionaries(
+            {"q": st.none() | _str_value,
+             "n": st.none() | st.integers(-2 ** 63, 2 ** 63 - 1)})
+    return pa.array(draw(st.lists(values, min_size=n, max_size=n)), typ)
+
+
+@st.composite
+def _arrow_table(draw):
+    """A table of 0-3 columns (names may repeat), cut into record batches
+    of 1-4 rows."""
+    n = draw(st.integers(0, 8))
+    names = draw(st.lists(st.sampled_from(["a", "b", "é", 'q"', "\n"]),
+                          max_size=3))
+    table = pa.Table.from_arrays([draw(_arrow_column(n)) for _ in names],
+                                 names=names)
+    return pa.Table.from_batches(
+        table.to_batches(max_chunksize=draw(st.integers(1, 4))),
+        table.schema)
+
+
+def _texts(table):
+    return [record_texts(b) for b in table.to_batches()]
+
+
+@settings(max_examples=200, deadline=None)
+@given(_arrow_table(), _arrow_table(), _str_value,
+       st.integers(min_value=0, max_value=600))
+def test_arrow_record_texts_match_dict_packing(nodes, rels, tag, max_bytes):
+    """Texts built with compute kernels are the encoder's JSON of each
+    row dict, and packing them gives the bodies and errors of
+    ``pack_envelopes`` over the same tables' ``to_pylist()`` dicts."""
+    for table in (nodes, rels):
+        for batch in table.to_batches():
+            assert record_texts(batch).to_pylist() == [
+                _encode(r) + "," for r in batch.to_pylist()]
+    want = _outcome(lambda: list(pack_envelopes(
+        nodes.to_pylist(), rels.to_pylist(), tag, max_bytes)))
+    got = _outcome(lambda: list(pack_texts(
+        _texts(nodes), _texts(rels), tag, max_bytes)))
+    assert got == want
+
+
+def _record_table(n, pad=10):
+    return pa.table({"k": pa.array(range(n)), "pad": ["x" * pad] * n})
+
+
+def test_pack_texts_empty_sides():
+    one = _record_table(1)
+    assert list(pack_texts([], [], "t")) == []
+    for nodes, rels in (([one], []), ([], [one]), ([one], [one])):
+        got = list(pack_texts(
+            [record_texts(b) for t in nodes for b in t.to_batches()],
+            [record_texts(b) for t in rels for b in t.to_batches()], "t"))
+        assert got == list(pack_envelopes(
+            [r for t in nodes for r in t.to_pylist()],
+            [r for t in rels for r in t.to_pylist()], "t"))
+
+
+def test_pack_texts_record_exactly_at_budget():
+    rec = {"k": 0, "pad": "x" * 10}
+    max_bytes = len(envelope_json([], [], 0, 10 ** 9, "t").encode()) \
+        + _record_size(rec)
+    texts = _texts(_record_table(1))
+    body, = pack_texts(texts, [], "t", max_bytes)
+    assert body == envelope_json([rec], [], 0, 1, "t")
+    with pytest.raises(ValueError, match=f"single nodes record of "
+                       f"{_record_size(rec)} bytes"):
+        list(pack_texts(texts, [], "t", max_bytes - 1))
+    with pytest.raises(ValueError, match="single relations record"):
+        list(pack_texts([], texts, "t", max_bytes - 1))
+
+
+def test_pack_texts_chunk_spans_batches_and_sides():
+    """One chunk may take records from several batches and run from the
+    last nodes into the first relations."""
+    nodes = pa.Table.from_batches(_record_table(5).to_batches(2))
+    rels = pa.Table.from_batches(_record_table(3).to_batches(1))
+    node_recs, rel_recs = nodes.to_pylist(), rels.to_pylist()
+    size = _record_size(node_recs[0])
+    max_bytes = len(envelope_json([], [], 0, 10 ** 9, "t").encode()) \
+        + 3 * size
+    got = list(pack_texts(_texts(nodes), _texts(rels), "t", max_bytes))
+    assert [(len(json.loads(b)["nodes"]), len(json.loads(b)["relations"]))
+            for b in got] == [(3, 0), (2, 1), (0, 2)]
+    assert got == _two_pass_pack(node_recs, rel_recs, "t", max_bytes)
+
+
+def test_record_texts_escapes_like_the_encoder():
+    """Backslashes, quotes and every control character, alone and side
+    by side in one value, escape exactly as the record encoder does."""
+    specials = ['"', "\\", "\x7f", "\u2028", "😀"] + [
+        chr(c) for c in range(0x20)]
+    values = specials + ["".join(specials), '\\"', '"\\', "\\\n", None]
+    batch = pa.RecordBatch.from_pydict({"s": values})
+    assert record_texts(batch).to_pylist() == [
+        _encode(r) + "," for r in batch.to_pylist()]
+
+
+def test_record_texts_repeated_name_keeps_last_column():
+    """A repeated column name keeps its last column, as the row dict of
+    ``to_pylist()`` and ``Row.asDict()`` does."""
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2]), pa.array(["x", None]), pa.array([True, None])],
+        names=["a", "b", "a"])
+    assert record_texts(batch).to_pylist() == [
+        '{"a":true,"b":"x"},', '{"a":null,"b":null},']
+    assert batch.to_pylist() == [{"a": True, "b": "x"},
+                                 {"a": None, "b": None}]
+
+
+def test_record_texts_no_columns():
+    batch = pa.RecordBatch.from_pydict({"a": [1, 2]}).select([])
+    assert record_texts(batch).to_pylist() == ["{},", "{},"]
 
 
 # -- SQS publisher ----------------------------------------------------------

@@ -8,6 +8,7 @@ import json
 
 from pyspark.sql import functions as F
 
+from ab_metadata_pusher_spark.sinks.envelope import pack_envelopes
 from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
 from ab_metadata_pusher_spark.sources.fixtures import load_table
 from ab_metadata_pusher_spark.streaming import events as E
@@ -17,10 +18,22 @@ from tests.test_sinks import StubSqsClient
 
 def test_foreach_batch_publish_driver_mode(spark, sf_dir):
     """distributed=False: the reference-parity contiguous-chunk publish —
-    one collect, one envelope sequence per micro-batch."""
+    one collect, one envelope sequence per micro-batch, sent through
+    ``publish_collected`` and byte-identical to packing the batch's
+    ``asDict(recursive=True)`` rows."""
     stub = StubSqsClient()
-    publisher = SqsPublisher("https://queue/stream", lambda: stub,
-                             max_bytes=32 * 1024)
+    want: dict[str, list[str]] = {}
+
+    class ReferencePublisher(SqsPublisher):
+        def publish_collected(self, nodes, relations, tag):
+            want[tag] = list(pack_envelopes(
+                [r.asDict(recursive=True) for r in nodes.collect()],
+                [r.asDict(recursive=True) for r in relations.collect()],
+                tag, self.max_bytes))
+            return super().publish_collected(nodes, relations, tag)
+
+    publisher = ReferencePublisher("https://queue/stream", lambda: stub,
+                                   max_bytes=32 * 1024)
     stream = E.events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type")
     q = E.foreach_batch_publish(stream, publisher, tag="tick1",
@@ -37,6 +50,12 @@ def test_foreach_batch_publish_driver_mode(spark, sf_dir):
             total += len(env["nodes"])
     n_events = load_table(spark, sf_dir, "events").count()
     assert total == n_events
+    got: dict[str, list[str]] = {}
+    for batch in stub.batches:
+        for e in batch["Entries"]:
+            body = e["MessageBody"]
+            got.setdefault(json.loads(body)["tag"], []).append(body)
+    assert got == want
 
 
 def test_foreach_batch_publish_distributed(spark, sf_dir, tmp_path):
